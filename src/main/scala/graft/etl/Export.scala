@@ -9,13 +9,13 @@ import graft.sources.SingleFileSink
 object Export {
 
   /** Discover catalog tables whose name contains the city (ref
-    * write_to_volume.py:7-8). */
-  def discoverGoldTables(spark: SparkSession, city: String): Seq[String] = {
-    import spark.implicits._
-    spark.catalog.listTables()
-      .filter(t => t.name.contains(city))
-      .map(_.name).collect().toSeq
-  }
+    * write_to_volume.py:7-8): the tables and temp views of the current
+    * database, as `spark.catalog.listTables()` lists them. Read from the
+    * session catalog on the driver, because `listTables()` collects its
+    * listing through a Spark job. */
+  def discoverGoldTables(spark: SparkSession, city: String): Seq[String] =
+    spark.sessionState.catalog.listTables(spark.catalog.currentDatabase)
+      .map(_.table).filter(_.contains(city))
 
   /** Export each discovered table as <dir>/<name>.json and <name>.csv
     * (ref write_to_volume.py:12-16; CSV natively instead of toPandas). */

@@ -3,31 +3,46 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import scala.collection.immutable.ListMap
+import graft.expressions.GraftFunctions
 import graft.operators.ColumnOps
 
 /** Silver transform (ref transform_alchemer_data.py:13-235): scrubbing,
   * type casts, likert scoring, categorical recodes, validity flag.
   *
   * Differences from the reference, by design:
-  *  - The likert Python UDF becomes a native map-literal lookup
-  *    (ref utils.py:159-181) — stays inside whole-stage codegen.
+  *  - The per-cell work runs in static-call kernels (`graft_survey_clean`,
+  *    `graft_null_phrase`, `graft_likert_score`, `graft_recode` in
+  *    `graft.expressions`) instead of Column expression trees: the likert
+  *    Python UDF
+  *    (ref utils.py:159-181) becomes a table lookup, and the mojibake
+  *    regexes become byte replaces.
   *  - The ~40 stacked withColumn Projects collapse into a few selects.
   *  - Casts that the reference relies on returning null for junk input
   *    use try_cast (Spark 4 defaults to ANSI mode, which would throw).
   *  - Each recode applies only when its column exists, mirroring the
   *    reference's per-column try/except tolerance (transform_alchemer_data
   *    .py:28-33) uniformly, so the transform composes on partial schemas.
+  *
+  * Method budget: whole-stage codegen compiles this transform's
+  * projections into Java methods, and HotSpot does not JIT-compile a
+  * method over 8,000 bytecode bytes (`HugeMethodLimit`); such a method
+  * runs in the bytecode interpreter on every row. Every generated method
+  * of the plan on the full-width Kingston schema must stay within
+  * 8,000 bytes — `SilverKernelSpec` ("every generated method ... fits the
+  * JIT's 8,000-byte budget") guards it. A new per-column expression that
+  * breaks the budget belongs in a kernel.
   */
 object Silver {
 
   private val TimestampFmt = "MM/dd/yyyy h:mm:ss a"
 
   def transform(bronze: DataFrame, cfg: SurveyConfig): DataFrame = {
+    GraftFunctions.register(bronze.sparkSession)
     val steps: Seq[DataFrame => DataFrame] = Seq(
       repairHeaderMojibake,
-      scrubStringValues,
+      clean,
       nullPhraseScrub(_, cfg),
-      nanScrub,
       timestamps,
       likertScores(_, cfg),
       recodes,
@@ -40,17 +55,15 @@ object Silver {
   private def repairHeaderMojibake(df: DataFrame): DataFrame =
     ColumnOps.normalizeHeaders(df)
 
-  /** Mojibake repair across every string column in one projection
-    * (ref transform_alchemer_data.py:20-23). Both patterns are literal,
-    * so StringReplace/StringTranslate (plain UTF8String scans inside
-    * whole-stage codegen) replace the reference's regex calls — same
-    * result, no regex engine in the hot path. At 100 TB this scrub runs
-    * on every string cell; it must cost like memcmp, not like a matcher. */
-  private def scrubStringValues(df: DataFrame): DataFrame =
+  /** Mojibake repair, then literal "nan" → null, across every string
+    * column in one projection (ref transform_alchemer_data.py:20-23,
+    * 38-39). The reference runs the "nan" scrub after the null-phrase
+    * scrub. Each of the two either keeps a cell or nulls it, judging the
+    * cell alone, so their order does not change the result. */
+  private def clean(df: DataFrame): DataFrame =
     df.select(df.schema.fields.map { f =>
       if (f.dataType == StringType)
-        translate(replace(col(f.name), lit("â€™"), lit("'")), "Ã", "i")
-          .as(f.name)
+        call_function("graft_survey_clean", col(f.name)).as(f.name)
       else col(f.name)
     }.toSeq: _*)
 
@@ -65,21 +78,11 @@ object Silver {
     // at gate scale (ConstructProbe, §5 driver). The scrubs are
     // independent per-column rewrites, so batching them is semantics-
     // preserving by construction.
+    val phrases = typedLit(cfg.nullPhrases)
     df.withColumns(present.map { c =>
-      val normalized = trim(regexp_replace(lower(col(c)), "[^\\w\\s]", ""))
-      c -> when(normalized.isin(cfg.nullPhrases: _*), lit(null))
-        .otherwise(col(c))
+      c -> call_function("graft_null_phrase", col(c), phrases)
     }.toMap)
   }
-
-  /** Literal "nan" → null over every column in one projection
-    * (ref transform_alchemer_data.py:38-39). */
-  private def nanScrub(df: DataFrame): DataFrame =
-    df.select(df.schema.fields.map { f =>
-      if (f.dataType == StringType)
-        when(col(f.name) === "nan", lit(null)).otherwise(col(f.name)).as(f.name)
-      else col(f.name)
-    }.toSeq: _*)
 
   /** Timestamp casts + duration columns (ref transform_alchemer_data.py:44-56).
     *
@@ -117,20 +120,20 @@ object Silver {
     }
   }
 
-  /** Likert scoring as a native map lookup (replaces the Python UDF,
+  /** Likert scoring as a table lookup (replaces the Python UDF,
     * ref utils.py:159-181, applied transform_alchemer_data.py:62-75):
     * unknown or null responses score 0, matching mapping.get(x, 0). */
   private def likertScores(df: DataFrame, cfg: SurveyConfig): DataFrame = {
     val present = cfg.likertColumns.filter(df.columns.contains)
     if (present.isEmpty) return df
-    val mapLit = map(SurveyConfig.LikertMapping.toSeq
-      .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
+    val table = typedLit(SurveyConfig.LikertMapping)
     val scored = df.withColumns(present.map { c =>
-      c -> coalesce(element_at(mapLit, col(c)), lit(0))
+      c -> call_function("graft_likert_score", col(c), table)
     }.toMap)
     // per-domain means + grand mean in ONE batched projection (all read
     // only the stage-1 scores — §5 driver-side analysis cost, see
-    // nullPhraseScrub; ref transform_alchemer_data.py:67-75)
+    // nullPhraseScrub; ref transform_alchemer_data.py:67-75). A ListMap,
+    // so the new columns follow likertColumnsDict order, Everything last.
     val domains = cfg.likertColumnsDict
       .filter { case (_, cols) => cols.forall(scored.columns.contains) }
       .map { case (scoreCol, cols) =>
@@ -138,12 +141,41 @@ object Silver {
       }
     val grand =
       if (present.size == cfg.likertColumns.size)
-        Map("5DW Score: Everything" ->
+        Seq("5DW Score: Everything" ->
           round(present.map(col).reduce(_ + _) / lit(present.size), 2))
-      else Map.empty[String, org.apache.spark.sql.Column]
-    val all = domains ++ grand
-    if (all.isEmpty) scored else scored.withColumns(all.toMap)
+      else Nil
+    val all = ListMap(domains ++ grand: _*)
+    if (all.isEmpty) scored else scored.withColumns(all)
   }
+
+  private val Unknown = "Unknown"
+  private val PreferNotToAnswer = "I prefer not to answer this question"
+
+  /** (column, value → recoded value, whether an all-space cell is
+    * Unknown): the recodes that are a null/blank test plus a lookup. A
+    * null cell always becomes Unknown. */
+  private val DictRecodes: Seq[(String, Map[String, String], Boolean)] = Seq(
+    // Gender (95-104)
+    ("Gender", Map("Prefer not to say" -> Unknown, "Write In" -> "Other"), false),
+    // CM Name blank → Unknown (112-119)
+    ("CM Name", Map.empty[String, String], true),
+    // Current living situation (124-132)
+    ("Current living situation", Map("Prefer not to say" -> Unknown), true),
+    // Household Income collapse (183-196)
+    ("Household Income", Map(PreferNotToAnswer -> Unknown,
+      "Less than $20,000" -> "Less than $50,000",
+      "$20,000 to $49,999" -> "Less than $50,000"), false)) ++
+    // prefer-not-to-answer batch (137-148)
+    Seq(
+      "How many years lived in Kingston",
+      "Why are you interested in this project?",
+      "In a typical month, how difficult is it for your household to pay for usual household expenses?",
+      "Hispanic or Latinx").map(c => (c, Map(PreferNotToAnswer -> Unknown), true))
+
+  private def recode(c: String, table: Map[String, String],
+      blankIsUnknown: Boolean): Column =
+    call_function("graft_recode", col(c), typedLit(table), lit(Unknown),
+      lit(blankIsUnknown))
 
   /** Categorical recodes (ref transform_alchemer_data.py:80-196) as ONE
     * batched projection (§5 driver-side analysis cost, see
@@ -164,35 +196,9 @@ object Silver {
               .when(col("Race/Ethnicity") === "I prefer not to answer this question", "Unknown")
               .when(col("Race/Ethnicity").isNull, "Unknown")
               .otherwise(col("Race/Ethnicity")))
-    // Gender (95-104)
-    if (has("Gender"))
-      out("Gender") =
-        when(col("Gender").isNull || col("Gender") === "Prefer not to say", "Unknown")
-          .when(col("Gender") === "Write In", "Other")
-          .otherwise(col("Gender"))
-    // CM Name blank → Unknown (112-119)
-    if (has("CM Name"))
-      out("CM Name") =
-        when(col("CM Name").isNull || trim(col("CM Name")) === "", "Unknown")
-          .otherwise(col("CM Name"))
-    // Current living situation (124-132)
-    if (has("Current living situation"))
-      out("Current living situation") =
-        when(col("Current living situation").isNull ||
-          trim(col("Current living situation")) === "" ||
-          col("Current living situation") === "Prefer not to say", "Unknown")
-          .otherwise(col("Current living situation"))
-    // prefer-not-to-answer batch (137-148)
-    val preferNot = Seq(
-      "How many years lived in Kingston",
-      "Why are you interested in this project?",
-      "In a typical month, how difficult is it for your household to pay for usual household expenses?",
-      "Hispanic or Latinx")
-    preferNot.filter(has).foreach { c =>
-      out(c) =
-        when(col(c).isNull || trim(col(c)) === "" ||
-          col(c) === "I prefer not to answer this question", "Unknown")
-          .otherwise(col(c))
+    // dictionary recodes (95-148, 183-196)
+    DictRecodes.filter { case (c, _, _) => has(c) }.foreach {
+      case (c, table, blankIsUnknown) => out(c) = recode(c, table, blankIsUnknown)
     }
     // zip truncation (153-162)
     if (has("IP Address - Zip Code"))
@@ -216,14 +222,6 @@ object Silver {
           .when(age < 120, "75 years and older")
           .otherwise("Unknown")
     }
-    // Household Income collapse (183-196)
-    if (has("Household Income"))
-      out("Household Income") =
-        when(col("Household Income").isNull ||
-          col("Household Income") === "I prefer not to answer this question", "Unknown")
-          .when(col("Household Income") === "Less than $20,000" ||
-            col("Household Income") === "$20,000 to $49,999", "Less than $50,000")
-          .otherwise(col("Household Income"))
     if (out.isEmpty) df0 else df0.withColumns(out.toMap)
   }
 

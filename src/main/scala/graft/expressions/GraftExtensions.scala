@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 
 /** Registration for graft's native expressions.
   *
@@ -139,6 +139,40 @@ object GraftFunctions {
             "graft_cell_pairs: topK must be an integer literal")
         }
         CellPairs(children.head, minScore, k)
+      }),
+    (
+      FunctionIdentifier("graft_survey_clean"),
+      new ExpressionInfo(classOf[SurveyClean].getName, "graft_survey_clean"),
+      (children: Seq[Expression]) => {
+        require(children.size == 1, "graft_survey_clean takes exactly 1 argument")
+        SurveyClean(children.head)
+      }),
+    (
+      FunctionIdentifier("graft_null_phrase"),
+      new ExpressionInfo(classOf[NullPhrase].getName, "graft_null_phrase"),
+      (children: Seq[Expression]) => {
+        require(children.size == 2, "graft_null_phrase takes (text, phrases)")
+        NullPhrase(children.head,
+          SurveyKernels.stringArrayLiteral("graft_null_phrase", children(1)))
+      }),
+    (
+      FunctionIdentifier("graft_likert_score"),
+      new ExpressionInfo(classOf[LikertScore].getName, "graft_likert_score"),
+      (children: Seq[Expression]) => {
+        require(children.size == 2, "graft_likert_score takes (response, table)")
+        LikertScore(children.head, SurveyKernels.mapLiteral[Int](
+          "graft_likert_score", children(1), IntegerType))
+      }),
+    (
+      FunctionIdentifier("graft_recode"),
+      new ExpressionInfo(classOf[Recode].getName, "graft_recode"),
+      (children: Seq[Expression]) => {
+        require(children.size == 4,
+          "graft_recode takes (value, table, unknown, blank_is_unknown)")
+        Recode(children.head,
+          SurveyKernels.mapLiteral[String]("graft_recode", children(1), StringType),
+          SurveyKernels.stringArg("graft_recode", "unknown", children(2)),
+          SurveyKernels.booleanArg("graft_recode", "blank_is_unknown", children(3)))
       }))
 
   /** Idempotent per-session registration. */

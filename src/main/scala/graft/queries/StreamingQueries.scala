@@ -108,18 +108,33 @@ object StreamingQueries {
     * sentinel row, CDC change sets, re-delivery halves. These are pure
     * functions of the fixture (an ingest INPUT a real pipeline receives,
     * not computes), so they are synthesized to parquet once per fixture
-    * dir and copied into each run's drop directory thereafter — the mm
+    * and copied into each run's drop directory thereafter — the mm
     * family's `staged` precedent: fixture synthesis is not the operator
     * under test, and the streamed computation itself stays fully
-    * measured. `_SUCCESS` gates readability (a crashed build rebuilds);
-    * keyed by the fixture path so ladder scales never alias. */
-  private def stagedInput(d: String, name: String)(
+    * measured. `_SUCCESS` gates readability (a crashed build rebuilds).
+    * Keyed by the fixture dir, so ladder scales never alias, and by the
+    * `source` parquet's [[fixtureStamp]], so a fixture regenerated in
+    * place is staged again instead of being read stale. */
+  private[graft] def stagedInput(d: String, source: String, name: String)(
       build: String => Unit): String = {
     val dir = new java.io.File(
       sys.props("java.io.tmpdir"),
-      s"graft_stream_fix_${java.lang.Integer.toHexString(d.hashCode)}/$name")
+      s"graft_stream_fix_${java.lang.Integer.toHexString(d.hashCode)}_" +
+        s"${fixtureStamp(source)}/$name")
     if (!new java.io.File(dir, "_SUCCESS").isFile) build(dir.toString)
     dir.toString
+  }
+
+  /** Latest mtime and total size of a parquet fixture, a file or a
+    * directory of part files, as hex. */
+  private def fixtureStamp(path: String): String = {
+    val f = new java.io.File(path)
+    val files =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.filter(_.isFile)
+      else Seq(f)
+    val mtime = files.map(_.lastModified).foldLeft(0L)(math.max)
+    s"${java.lang.Long.toHexString(mtime)}_" +
+      java.lang.Long.toHexString(files.map(_.length).sum)
   }
 
   /** Copy a staged parquet dir's part files into a drop directory under
@@ -254,7 +269,7 @@ object StreamingQueries {
       // function of the fixture, so it is synthesized ONCE per fixture
       // dir (stagedInput) and only copied per run — the max(ts) probe
       // and the 1-row write no longer run inside the measured time.
-      val sentDir = stagedInput(d, "sess_sentinel") { dir =>
+      val sentDir = stagedInput(d, path, "sess_sentinel") { dir =>
         import org.apache.spark.sql.types.{LongType, TimestampType}
         val sentTs = raw.schema("ts").dataType match {
           case LongType =>
@@ -399,11 +414,11 @@ object StreamingQueries {
       // both halves are pure functions of the fixture — synthesized once
       // per fixture dir, copied per run (the stagedInput contract); the
       // two query LIFETIMES and the checkpoint resume stay fully measured
-      val halfA = stagedInput(d, "resume_half_a") { dir =>
+      val halfA = stagedInput(d, path, "resume_half_a") { dir =>
         raw.filter(col("event_id") % 2 === 0)
           .coalesce(1).write.mode("overwrite").parquet(dir)
       }
-      val halfB = stagedInput(d, "resume_half_b") { dir =>
+      val halfB = stagedInput(d, path, "resume_half_b") { dir =>
         raw.filter(col("event_id") % 2 === 1)
           .coalesce(1).write.mode("overwrite").parquet(dir)
       }
@@ -547,7 +562,7 @@ object StreamingQueries {
       // read-only state v0 — the merge writes only $stateRoot/v<bid>.
       Seq(change(1, 3L, 30L, "U1"), change(2, 5L, 50L, "U2"))
         .zipWithIndex.foreach { case (c, i) =>
-          val stage = stagedInput(d, s"upsert_change$i") { dir =>
+          val stage = stagedInput(d, s"$d/orders.parquet", s"upsert_change$i") { dir =>
             c.coalesce(1).write.mode("overwrite").parquet(dir)
           }
           val part = new java.io.File(stage).listFiles
@@ -556,7 +571,7 @@ object StreamingQueries {
             java.nio.file.Paths.get(srcDir, s"changes_$i.parquet"),
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         }
-      var latest = stagedInput(d, "upsert_base") { dir =>
+      var latest = stagedInput(d, s"$d/orders.parquet", "upsert_base") { dir =>
         base.write.mode("overwrite").parquet(dir)
       }
       val schema = s.read.parquet(latest).schema

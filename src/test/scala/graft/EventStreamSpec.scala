@@ -276,4 +276,30 @@ class EventStreamSpec extends SparkSpec {
     assert(diag.contains("stateWidthFor") && diag.contains("/no/such/file")
       && diag.contains("floor"), s"missing fallback diagnostic: '$diag'")
   }
+
+  test("a staged stream input is rebuilt when its fixture changes in place") {
+    import graft.queries.StreamingQueries.stagedInput
+    val d = java.nio.file.Files.createTempDirectory("graft-fixture").toString
+    val fixture = s"$d/events.parquet"
+    Seq(1, 2, 3).toDF("v").coalesce(1).write.parquet(fixture)
+    var builds = 0
+    def stage(): String = stagedInput(d, fixture, "probe") { dir =>
+      builds += 1
+      spark.read.parquet(fixture).write.mode("overwrite").parquet(dir)
+    }
+    val first = stage()
+    assert(stage() == first && builds == 1, "an unchanged fixture is reused")
+    // regenerate in place: same path, new mtime and size
+    Seq(1, 2, 3, 4).toDF("v").coalesce(1).write.mode("overwrite").parquet(fixture)
+    new java.io.File(fixture).listFiles.foreach(f =>
+      f.setLastModified(f.lastModified + 10000))
+    val second = stage()
+    assert(builds == 2 && second != first)
+    assert(spark.read.parquet(second).count() == 4)
+    // a touch alone (same bytes, new mtime) also rebuilds
+    new java.io.File(fixture).listFiles.foreach(f =>
+      f.setLastModified(f.lastModified + 10000))
+    stage()
+    assert(builds == 3)
+  }
 }

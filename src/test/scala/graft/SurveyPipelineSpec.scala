@@ -221,4 +221,45 @@ class SurveyPipelineSpec extends SparkSpec {
     assert(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(
       dir, "gold_kingston_representation_check.csv")))
   }
+
+  test("gold table discovery runs no Spark job") {
+    val discoveryJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("discovery") => discoveryJobs.incrementAndGet(); ()
+          case Some("marker") => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      Seq(1).toDF("x").createOrReplaceTempView("gold_kingston_discovery_check")
+      sc.setJobGroup("discovery", "gold table discovery")
+      val found = Export.discoverGoldTables(spark, "kingston")
+      // the listener bus is asynchronous and in order: once the marker
+      // job's start arrives, every earlier job start has arrived too
+      sc.setJobGroup("marker", "listener bus marker")
+      spark.range(4).repartition(2).count()
+      sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(found.contains("gold_kingston_discovery_check"))
+      assert(discoveryJobs.get == 0)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("5DW score columns follow likertColumnsDict order, Everything last") {
+    val likert = SurveyConfig.kingston.likertColumns
+    val df = Seq("1").toDF("Response ID")
+      .select(col("Response ID") +: likert.map(lit("A lot better").as(_)): _*)
+    val scores = Silver.transform(df, SurveyConfig.kingston).columns
+      .filter(_.startsWith("5DW Score: ")).toSeq
+    assert(scores == SurveyConfig.kingston.likertColumnsDict.map(_._1) :+
+      "5DW Score: Everything")
+  }
 }
